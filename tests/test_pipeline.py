@@ -4,17 +4,24 @@ reference test_tmdb_index.py:438-649 (process end-to-end matrices)."""
 from __future__ import annotations
 
 from datetime import UTC, date, datetime
+from types import SimpleNamespace
+
+import pytest
 
 from tests.conftest import rows
+from tmdb_index_spark.operators.selection import build_fetch_worklist
+from tmdb_index_spark.operators.upsert import align_id_col, update_or_append
 from tmdb_index_spark.pipeline import (
     changes_backfill_date_range,
     insert_external_ids,
     insert_latest_changes,
+    parse_external_ids_row,
     process,
     update_export_flag,
 )
-from tmdb_index_spark.schemas import empty_index_schema
-from tmdb_index_spark.sources.fetcher import FixtureFeed
+from tmdb_index_spark.schemas import changes_schema, empty_index_schema, index_schema
+from tmdb_index_spark.sources import parquet
+from tmdb_index_spark.sources.fetcher import FixtureFeed, external_ids_batch
 
 NOW = datetime(2024, 5, 3, 12, 0, 0, tzinfo=UTC)
 TODAY = date(2024, 5, 3)
@@ -168,6 +175,119 @@ def test_process_tv_keeps_tvdb(spark):
     got = rows(out)
     assert "tvdb_id" in out.columns
     assert got[2]["tvdb_id"] == 777
+
+
+def _reference_process(df, feed, entity_type, backfill_limit, refresh_limit):
+    """The daily composition with ``align_id_col`` (its own ``max(id)``
+    action) after every upsert and no pin: what ``process`` must equal."""
+    spark = df.sparkSession
+    last = {}
+    for d in changes_backfill_date_range(df, entity_type, TODAY):
+        for r in feed.changes(entity_type, d):
+            if r.get("id") is not None:
+                last[int(r["id"])] = {"id": int(r["id"]), "adult": r.get("adult"), "date": d}
+    if last:
+        df = update_or_append(df, spark.createDataFrame(list(last.values()), changes_schema()))
+    df = update_export_flag(align_id_col(df), feed, entity_type)
+    ids = sorted(r["id"] for r in build_fetch_worklist(df, backfill_limit, refresh_limit).collect())
+    if not ids:
+        return df
+    fetched = [parse_external_ids_row(feed, entity_type, i, NOW) for i in ids]
+    return align_id_col(update_or_append(df, external_ids_batch(spark, fetched, entity_type)))
+
+
+def _assert_matches_reference(df, make_feed, entity_type, backfill_limit=10, refresh_limit=5):
+    feed, ref_feed = make_feed(), make_feed()
+    out = process(
+        df, feed, entity_type,
+        days_limit=100_000, backfill_limit=backfill_limit, refresh_limit=refresh_limit,
+        today=TODAY, now=NOW,
+    )
+    ref = _reference_process(df, ref_feed, entity_type, backfill_limit, refresh_limit)
+    assert out.schema == ref.schema  # names, order, types and nullability
+    assert not out.schema["id"].nullable
+    assert rows(out) == rows(ref)
+    assert feed.calls == ref_feed.calls
+    return out
+
+
+def _published(spark, tmp_path, df):
+    """``df`` as the cron reads it back: written by the sink, scanned."""
+    path = str(tmp_path / "index.parquet")
+    parquet.write_index(df, path)
+    return parquet.scan_or_empty(spark, path)
+
+
+def test_process_matches_realigning_reference_bootstrap(spark):
+    df = spark.createDataFrame([], empty_index_schema())
+    _assert_matches_reference(df, _feed, "movie")
+
+
+def test_process_matches_realigning_reference_ids_past_max(spark, tmp_path):
+    boot = process(
+        spark.createDataFrame([], empty_index_schema()), _feed(), "movie",
+        days_limit=100_000, backfill_limit=2, refresh_limit=0,
+        today=date(2024, 5, 2), now=datetime(2024, 5, 2, 6, tzinfo=UTC),
+    )
+    df = _published(spark, tmp_path, boot)
+
+    def feed():
+        f = _feed()
+        # ids 7 and 11 leave gaps 3..6 and 8..10 for the realignment
+        f.changes_by_day[TODAY] = [{"id": 7, "adult": True}, {"id": 11, "adult": None}]
+        f.exports["movie"] = [0, 7, 9]
+        f.external[7] = {"imdb_id": "tt0000777"}
+        return f
+
+    out = _assert_matches_reference(df, feed, "movie", backfill_limit=4, refresh_limit=1)
+    assert [r["id"] for r in rows(out)] == list(range(12))
+
+
+def test_process_matches_realigning_reference_empty_worklist(spark):
+    fetched = datetime(2024, 5, 2, 12, tzinfo=UTC)
+    df = spark.createDataFrame(
+        [
+            (i, date(2024, 5, 1), False, True, True, fetched, 100 + i, None)
+            for i in range(3)
+        ],
+        index_schema("movie"),
+    )
+
+    def feed():
+        # an older change than the fetch is not stale; nothing is unfetched
+        return FixtureFeed(
+            changes_by_day={date(2024, 5, 1): [{"id": 1, "adult": True}]},
+            exports={"movie": [0, 1]},
+        )
+
+    out = _assert_matches_reference(df, feed, "movie", backfill_limit=10, refresh_limit=0)
+    assert [r["adult"] for r in rows(out)] == [False, True, False]
+    assert [r["retrieved_at"] for r in rows(out)] == [r["retrieved_at"] for r in rows(df)]
+
+
+def test_process_matches_realigning_reference_tv(spark, tmp_path):
+    def feed():
+        f = _feed()
+        f.changes_by_day[TODAY] = [{"id": 4, "adult": None}]
+        return f
+
+    boot = process(
+        spark.createDataFrame([], empty_index_schema()), feed(), "tv",
+        days_limit=100_000, backfill_limit=3, refresh_limit=0,
+        today=TODAY, now=NOW,
+    )
+    out = _assert_matches_reference(_published(spark, tmp_path, boot), feed, "tv")
+    assert "tvdb_id" in out.columns
+    assert rows(out)[2]["tvdb_id"] == 777
+
+
+def test_write_single_parquet_raises_on_extra_part_files(spark, tmp_path, monkeypatch):
+    two = [str(tmp_path / "part-0.parquet"), str(tmp_path / "part-1.parquet")]
+    monkeypatch.setattr(parquet, "glob", SimpleNamespace(glob=lambda pattern: two))
+    df = spark.createDataFrame([(0,)], "id long")
+    with pytest.raises(RuntimeError, match="expected one part file"):
+        parquet.write_single_parquet(df, str(tmp_path / "index.parquet"))
+    assert not (tmp_path / "index.parquet").exists()
 
 
 def test_read_jsonl_gz_native_scan(spark, tmp_path):

@@ -1,8 +1,9 @@
 """CLI entry point (SURVEY.md §3.1; reference ``main``,
 tmdb_index.py:603-713).
 
-Lifecycle: scan-or-bootstrap → schema repair → process → monotonic
-guard → report → zstd sink.  ``--dry-run`` skips the sink; the guard
+Lifecycle (:func:`run_daily`, shared with ``tools/publish_all.py``):
+scan-or-bootstrap → schema repair → process → monotonic guard → report
+→ zstd sink.  ``--dry-run`` skips the sink; the guard
 refuses to shrink the index (reference tmdb_index.py:688-694, C10).
 """
 
@@ -22,6 +23,61 @@ from tmdb_index_spark.sources.parquet import scan_or_empty, write_index
 logger = logging.getLogger(__name__)
 
 
+def run_daily(
+    spark,
+    feed,
+    entity_type: str,
+    filename: str,
+    days_limit: int = 30,
+    backfill_limit: int = 10_000,
+    refresh_limit: int = 1_000,
+    dry_run: bool = False,
+    today=None,
+    now=None,
+) -> bool:
+    """One daily update of one index file: scan-or-bootstrap → tvdb
+    drop → process → monotonic guard → step summary → sink.  Returns
+    False when the guard refuses to write."""
+    df = scan_or_empty(spark, filename)
+    # Schema repair: stray tvdb_id on non-tv indexes is dropped at load
+    # (reference tmdb_index.py:675-677).
+    if entity_type != "tv" and "tvdb_id" in df.columns:
+        df = df.drop("tvdb_id")
+    old_count = df.count()
+    df = df.cache()
+
+    df_new = process(
+        df,
+        feed,
+        entity_type,
+        days_limit=days_limit,
+        backfill_limit=backfill_limit,
+        refresh_limit=refresh_limit,
+        today=today,
+        now=now,
+    ).cache()
+
+    # Monotonic-growth guard (C10): a shrinking index means a broken feed.
+    new_count = df_new.count()
+    if new_count < old_count:
+        logger.error(
+            "[%s] index shrank: %d -> %d; refusing to write",
+            entity_type, old_count, new_count,
+        )
+        return False
+
+    summary = format_gh_step_summary(df, df_new, os.path.basename(filename))
+    print(summary)
+    gh_summary = os.environ.get("GITHUB_STEP_SUMMARY")
+    if gh_summary:
+        with open(gh_summary, "a", encoding="utf-8") as f:
+            f.write(summary)
+
+    if not dry_run:
+        write_index(df_new, filename)
+    return True
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="tmdb-index-spark")
     p.add_argument("--tmdb-type", choices=("movie", "tv", "person"), required=True)
@@ -35,41 +91,17 @@ def main(argv: list[str] | None = None) -> int:
 
     logging.basicConfig(level=logging.INFO)
     spark = get_spark("tmdb-index-spark-cli")
-
-    df = scan_or_empty(spark, args.filename)
-    # Schema repair: stray tvdb_id on non-tv indexes is dropped at load
-    # (reference tmdb_index.py:675-677).
-    if args.tmdb_type != "tv" and "tvdb_id" in df.columns:
-        df = df.drop("tvdb_id")
-    old_count = df.count()
-    df = df.cache()
-
-    feed = HttpFeed(args.tmdb_api_key)
-    df_new = process(
-        df,
-        feed,
+    ok = run_daily(
+        spark,
+        HttpFeed(args.tmdb_api_key),
         args.tmdb_type,
+        args.filename,
         days_limit=args.days_limit,
         backfill_limit=args.backfill_limit,
         refresh_limit=args.refresh_limit,
-    ).cache()
-
-    # Monotonic-growth guard (C10): a shrinking index means a broken feed.
-    new_count = df_new.count()
-    if new_count < old_count:
-        logger.error("index shrank: %d -> %d; refusing to write", old_count, new_count)
-        return 1
-
-    summary = format_gh_step_summary(df, df_new, os.path.basename(args.filename))
-    print(summary)
-    gh_summary = os.environ.get("GITHUB_STEP_SUMMARY")
-    if gh_summary:
-        with open(gh_summary, "a", encoding="utf-8") as f:
-            f.write(summary)
-
-    if not args.dry_run:
-        write_index(df_new, args.filename)
-    return 0
+        dry_run=args.dry_run,
+    )
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":

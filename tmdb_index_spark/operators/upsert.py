@@ -20,14 +20,20 @@ handles the small-feed case by broadcasting the batch side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Mapping
+from typing import Any
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from tmdb_index_spark.operators.stats import agg_row
 
 __all__ = [
     "ordered_union_schema",
     "update_or_append",
     "update_or_append_join",
     "align_id_col",
+    "align_id_range",
     "validate_id",
 ]
 
@@ -147,17 +153,52 @@ def align_id_col(df: DataFrame) -> DataFrame:
     """Materialize the dense id domain 0..max(id): absent ids become
     all-null rows (reference ``align_id_col``, tmdb_index.py:62-71).
 
-    ``spark.range`` is a leaf relation; the left join shuffles on ``id``
-    once.  The single-row ``max(id)`` aggregate is an intentional driver
-    action — the range bound must be a literal.
+    The single-row ``max(id)`` aggregate is an intentional driver
+    action — the range bound must be a literal.  A caller that already
+    knows the bound uses :func:`align_id_range` and skips it.
     """
-    spark = df.sparkSession
-    max_id = df.agg(F.max("id")).collect()[0][0]
+    return align_id_range(df, df.agg(F.max("id")).collect()[0][0])
+
+
+def align_id_range(df: DataFrame, max_id: int | None) -> DataFrame:
+    """:func:`align_id_col` with a known bound: ``max_id`` must be
+    ``max(id)`` of ``df`` (None for no ids).
+
+    ``spark.range`` is a leaf relation; the left join shuffles on ``id``
+    once.
+    """
     if max_id is None:
         return df.select(*df.columns)
-    dense = spark.range(int(max_id) + 1).select(F.col("id").cast("long"))
+    dense = df.sparkSession.range(int(max_id) + 1).select(F.col("id").cast("long"))
     rest = [c for c in df.columns if c != "id"]
     return dense.join(df, on="id", how="left").select("id", *rest)
+
+
+def id_aggs() -> dict[str, Column]:
+    """The aggregates :func:`check_id` reads, by name (``__n__`` and
+    ``null__id`` / ``distinct__id`` match the stats aggregates, so a
+    merged map computes them once)."""
+    return {
+        "__n__": F.count(F.lit(1)),
+        "null__id": F.sum(F.col("id").isNull().cast("long")),
+        "min__id": F.min("id"),
+        "max__id": F.max("id"),
+        "distinct__id": F.count_distinct("id"),
+    }
+
+
+def check_id(row: Mapping[str, Any]) -> None:
+    """Raise unless an :func:`id_aggs` result describes a dense id."""
+    if row["__n__"] == 0:
+        return
+    if (row["null__id"] or 0) != 0:
+        raise AssertionError("id column must not have nulls")
+    if row["min__id"] != 0:
+        raise AssertionError("id column must start at 0")
+    if row["distinct__id"] != row["__n__"]:
+        raise AssertionError("id column must be unique")
+    if row["max__id"] != row["__n__"] - 1:
+        raise AssertionError("id column must be consecutive")
 
 
 def validate_id(df: DataFrame) -> None:
@@ -169,20 +210,4 @@ def validate_id(df: DataFrame) -> None:
     for an unordered Spark relation — the dense property is what
     consumers rely on).
     """
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("id").isNull().cast("int")).alias("nulls"),
-        F.min("id").alias("mn"),
-        F.max("id").alias("mx"),
-        F.count_distinct("id").alias("distinct"),
-    ).collect()[0]
-    if row["n"] == 0:
-        return
-    if (row["nulls"] or 0) != 0:
-        raise AssertionError("id column must not have nulls")
-    if row["mn"] != 0:
-        raise AssertionError("id column must start at 0")
-    if row["distinct"] != row["n"]:
-        raise AssertionError("id column must be unique")
-    if row["mx"] != row["n"] - 1:
-        raise AssertionError("id column must be consecutive")
+    check_id(agg_row(df, id_aggs()))

@@ -2,8 +2,20 @@
 
 Composition is identical to the reference's ``process``
 (tmdb_index.py:546-568): fold latest changes → update export flag →
-enrich external ids.  Each step builds a LAZY plan; actions happen only
-at guards, worklist collection, and the sink.
+enrich external ids.  Each step builds a LAZY plan.  ``process`` itself
+runs Spark work at three points, each over work that is then reused:
+
+1. one aggregate over the loaded frame — ``max(date)`` (the changes
+   resume point) and ``max(id)``, which with the driver-resident
+   change batch's ``max(id)`` is the dense realignment bound;
+2. one pin of the post-export-flag frame (a ledgered
+   ``localCheckpoint``), which the worklist's stale / backfill /
+   refresh branches, the enrichment join and the external-ids upsert
+   all read;
+3. one worklist collect, the pin's first reader.
+
+The returned frame is lazy over the pin; the caller's guard, report and
+sink are the remaining actions.
 
 Spark-first deviation from the reference's loop shape: the reference
 folds per-day change batches through ``update_or_append`` one day at a
@@ -21,12 +33,13 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tmdb_index_spark.operators.materialize import pin_frame
 from tmdb_index_spark.operators.selection import (
     select_backfill_candidates,
     select_refresh_candidates,
     select_stale_candidates,
 )
-from tmdb_index_spark.operators.upsert import align_id_col, update_or_append
+from tmdb_index_spark.operators.upsert import align_id_range, update_or_append
 from tmdb_index_spark.schemas import changes_schema
 from tmdb_index_spark.sources.fetcher import (
     CHANGES_EPOCH,
@@ -55,23 +68,34 @@ EXPORT_TYPES = {
 }
 
 
+def _frame_maxima(df: DataFrame) -> tuple[date | None, int | None]:
+    """``(max(date), max(id))`` of ``df`` in one aggregate; None for an
+    absent column or no rows."""
+    aggs = [F.max(c).alias(c) for c in ("date", "id") if c in df.columns]
+    row = df.agg(*aggs).collect()[0].asDict() if aggs else {}
+    return row.get("date"), row.get("id")
+
+
+def _resume_range(
+    max_date: date | None, entity_type: str, today: date | None
+) -> list[date]:
+    today = today or date.today()
+    if max_date is not None:
+        start = max_date - timedelta(days=1)
+    else:
+        start = CHANGES_EPOCH[entity_type]
+        logger.warning("no date column/rows; backfilling from epoch %s", start)
+    days = (today - start).days + 1
+    return [start + timedelta(days=i) for i in range(max(days, 0))]
+
+
 def changes_backfill_date_range(
     df: DataFrame, entity_type: str, today: date | None = None
 ) -> list[date]:
     """Resume from ``max(date) - 1 day`` (overlap one day to absorb
     partial final days), else the per-type epoch (reference
     ``tmdb_changes_backfill_date_range``, tmdb_index.py:220-238)."""
-    today = today or date.today()
-    start = None
-    if "date" in df.columns:
-        max_date = df.agg(F.max("date")).collect()[0][0]
-        if max_date is not None:
-            start = max_date - timedelta(days=1)
-    if start is None:
-        start = CHANGES_EPOCH[entity_type]
-        logger.warning("no date column/rows; backfilling from epoch %s", start)
-    days = (today - start).days + 1
-    return [start + timedelta(days=i) for i in range(max(days, 0))]
+    return _resume_range(_frame_maxima(df)[0], entity_type, today)
 
 
 def insert_latest_changes(
@@ -83,9 +107,14 @@ def insert_latest_changes(
 ) -> DataFrame:
     """C3: fetch per-day change lists, merge once, realign the dense id
     domain (reference ``insert_tmdb_latest_changes``,
-    tmdb_index.py:241-256)."""
+    tmdb_index.py:241-256).
+
+    The realignment bound is ``max(id)`` of the loaded frame (from the
+    same aggregate as the resume date) and of the driver-side batch, so
+    the upserted plan is never run just to read its maximum."""
     spark = df.sparkSession
-    date_range = changes_backfill_date_range(df, entity_type, today)[:days_limit]
+    max_date, max_id = _frame_maxima(df)
+    date_range = _resume_range(max_date, entity_type, today)[:days_limit]
     # The payloads are already driver-resident (sequential rate-limited
     # HTTP), so the keep-last fold across days happens in the same dict
     # pass that the per-day builder uses within a day: later day / later
@@ -100,10 +129,10 @@ def insert_latest_changes(
             if r.get("id") is None:
                 continue
             last[int(r["id"])] = {"id": int(r["id"]), "adult": r.get("adult"), "date": d}
-    if not last:
-        return align_id_col(df)
-    batch = spark.createDataFrame(list(last.values()), changes_schema())
-    return align_id_col(update_or_append(df, batch))
+    if last:
+        max_id = max(max(last), -1 if max_id is None else max_id)
+        df = update_or_append(df, spark.createDataFrame(list(last.values()), changes_schema()))
+    return align_id_range(df, max_id)
 
 
 def update_export_flag(df: DataFrame, feed: TmdbFeed, entity_type: str) -> DataFrame:
@@ -136,27 +165,36 @@ def insert_external_ids(
     now: Any = None,
 ) -> DataFrame:
     """C5: select work (stale ∪ backfill ∪ refresh), fetch driver-side in
-    id order, upsert + realign (reference ``insert_tmdb_external_ids``,
-    tmdb_index.py:482-543)."""
+    id order, upsert (reference ``insert_tmdb_external_ids``,
+    tmdb_index.py:482-543).
+
+    ``df`` is dense (``process`` realigns it in
+    :func:`insert_latest_changes`).  It is pinned once (a ledgered
+    ``localCheckpoint``, ``pin_frame(df, "checkpoint")``) before the
+    worklist collect, so the three selection branches, the enrichment
+    join and the upsert read the pinned rows instead of re-running its
+    plan.  The returned frame reads the pin: call ``release_pins`` only
+    after it has been written."""
     from datetime import UTC, datetime
 
     has_ra = "retrieved_at" in df.columns
     has_date = "date" in df.columns
 
-    parts = []
+    pickers = []
     if has_date and has_ra:
-        parts.append(select_stale_candidates(df).select("id"))
+        pickers.append(select_stale_candidates)
     if backfill_limit > 0:
-        parts.append(select_backfill_candidates(df, backfill_limit).select("id"))
+        pickers.append(lambda d: select_backfill_candidates(d, backfill_limit))
     if refresh_limit > 0 and has_ra:
-        parts.append(select_refresh_candidates(df, refresh_limit).select("id"))
-    if not parts:
+        pickers.append(lambda d: select_refresh_candidates(d, refresh_limit))
+    if not pickers:
         logger.warning("no external-id work predicates apply")
         return df
 
-    worklist = parts[0]
-    for p in parts[1:]:
-        worklist = worklist.unionByName(p)
+    df = pin_frame(df, "checkpoint")
+    worklist = pickers[0](df).select("id")
+    for pick in pickers[1:]:
+        worklist = worklist.unionByName(pick(df).select("id"))
     # Collect the (bounded: backfill+refresh limits + stale set) worklist
     # to the driver — the fetch is driver-side sequential I/O by design.
     ids = sorted(r[0] for r in worklist.distinct().collect())
@@ -168,7 +206,8 @@ def insert_external_ids(
         parse_external_ids_row(feed, entity_type, i, retrieved_at) for i in ids
     ]
     batch = external_ids_batch(df.sparkSession, rows, entity_type)
-    return align_id_col(update_or_append(df, batch))
+    # Batch ids are worklist ids, i.e. ids of the dense df: nothing is appended, so no realign.
+    return update_or_append(df, batch)
 
 
 def parse_external_ids_row(

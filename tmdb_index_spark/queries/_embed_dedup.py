@@ -2796,10 +2796,11 @@ def rolling_backtest_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = pin_frame(daily)  # every fold filters the same rollup
     # disjoint, ordered test windows are what lets ONE conditional
     # aggregate replace the per-fold filters below
-    assert all(
+    if not all(
         _BACKTEST_FOLDS[i][1] <= _BACKTEST_FOLDS[i + 1][0]
         for i in range(len(_BACKTEST_FOLDS) - 1)
-    )
+    ):
+        raise ValueError(f"backtest folds overlap or are unordered: {_BACKTEST_FOLDS}")
     cal = bounded_collect(
         daily.select(
             F.date_format("__day__", "yyyy-MM-dd").alias("__d__"),
